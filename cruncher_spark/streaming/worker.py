@@ -59,6 +59,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from cruncher_spark.merge.upsert import PointTable
 
@@ -111,7 +112,50 @@ def checkpoint_stream_id(checkpoint_dir: str) -> str:
     return sid
 
 
+def start_ledgered_stream(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    process: Callable[[DataFrame, int, str], None],
+    *,
+    stream_id: str | None = None,
+    trigger_seconds: float | None = None,
+    available_now: bool = False,
+) -> tuple[StreamingQuery, str]:
+    """The one micro-batch shell every streaming path runs in: start
+    ``stream`` checkpointed at ``checkpoint_dir`` with
+    ``process(batch, epoch, scope)`` as its ``foreachBatch`` body, and
+    return the query and its ledger scope.
+
+    ``scope`` is what the body mints ledger batch ids under (each caller
+    keeps its own id format around it). It is ``stream_id`` when the
+    caller pinned one — sharing a scope across checkpoints on purpose —
+    and otherwise THIS checkpoint's marker (:func:`checkpoint_stream_id`),
+    resolved on every start and bound into this stream's body. So one
+    object started on two checkpoints ledgers each stream under its own
+    scope; a scope cached across starts would make the second stream's
+    epochs collide with the first's and be skipped as replays.
+
+    Trigger: ``availableNow`` drains what is there and stops; otherwise a
+    ``processingTime`` of ``trigger_seconds`` when given, else Spark's
+    default (the next batch as soon as the previous one commits).
+    """
+    Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
+    scope = checkpoint_stream_id(checkpoint_dir) if stream_id is None else stream_id
+    writer = stream.writeStream.foreachBatch(
+        lambda batch, epoch: process(batch, epoch, scope)
+    ).option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start(), scope
+
+
 class CrunchWorker:
+    #: poison-message bound (worker.js:129-137): longer ids are NACKed to
+    #: the quarantine sink
+    _MAX_MESSAGE_BYTES = 1024
+
     def __init__(
         self,
         spark: SparkSession,
@@ -120,11 +164,9 @@ class CrunchWorker:
         point: PointTable,
         *,
         reliability: float = 1.0,
-        max_message_bytes: int = 1024,
         quarantine_dir: str | None = None,
         notify_dir: str | None = None,
         notify_routing_key: str | None = None,
-        exactly_once: bool = True,
         slowmode_seconds: float = 0.0,
         stream_id: str | None = None,
     ):
@@ -133,36 +175,41 @@ class CrunchWorker:
         self.plan_fn = plan_fn
         self.point = point
         self.reliability = reliability
-        self.max_message_bytes = max_message_bytes
         self.quarantine_dir = quarantine_dir
         self.notify_dir = notify_dir
         self.notify_routing_key = notify_routing_key
-        self.exactly_once = exactly_once
         self.slowmode_seconds = slowmode_seconds
         #: ledger scope for batch ids (same contract as
-        #: materialize.start_stream_refresh): defaults to a marker minted
-        #: inside the checkpoint dir at first stream start
-        #: (:func:`checkpoint_stream_id`), so two streams feeding one
+        #: materialize.start_stream_refresh): each started stream takes
+        #: the marker minted inside ITS checkpoint dir
+        #: (:func:`start_ledgered_stream`), so two streams feeding one
         #: PointTable — or a deleted-and-recreated checkpoint whose epochs
         #: restart at 0 — never collide with already-applied ids and get
         #: silently dropped as duplicates. Pass explicitly to pin identity
         #: across checkpoint moves (or to deliberately share a scope).
+        #: Holds the last started stream's scope, which direct
+        #: :meth:`process_batch` calls ledger under.
         #: NB: ledgers written before stream scoping existed hold bare
         #: epoch ids — reset such checkpoints rather than resuming them
         #: under a new scope, or the replayed last batch re-applies under
         #: its new id.
         self.stream_id = stream_id
+        self._pinned_stream_id = stream_id
         self.batches_processed = 0
         self.batches_failed = 0
 
-    def _ledger_id(self, batch_id: int) -> str:
-        if self.stream_id is not None:
-            return f"stream-{self.stream_id}-{batch_id}"
+    @staticmethod
+    def _ledger_id(batch_id: int, scope: str | None) -> str:
+        if scope is not None:
+            return f"stream-{scope}-{batch_id}"
         return str(batch_id)
 
     # -- one micro-batch (the foreachBatch body) ----------------------------
 
     def process_batch(self, ids_df: DataFrame, batch_id: int) -> None:
+        self._process(ids_df, batch_id, self.stream_id)
+
+    def _process(self, ids_df: DataFrame, batch_id: int, scope: str | None) -> None:
         # T3 SLOWMODE throttle (worker.js:31-32,162-165)
         if self.slowmode_seconds > 0:
             import time
@@ -171,8 +218,8 @@ class CrunchWorker:
         ids = ids_df.select(F.col(ids_df.columns[0]).alias("value"))
 
         # S7 poison-message guard (worker.js:129-137)
-        poisoned = ids.where(F.length("value") > self.max_message_bytes)
-        ids = ids.where(F.length("value") <= self.max_message_bytes)
+        poisoned = ids.where(F.length("value") > self._MAX_MESSAGE_BYTES)
+        ids = ids.where(F.length("value") <= self._MAX_MESSAGE_BYTES)
         if self.quarantine_dir is not None:
             self._append_quarantine(poisoned, batch_id, reason="poison")
 
@@ -185,13 +232,11 @@ class CrunchWorker:
 
         try:
             delta = self.plan_fn(self.tables, ids.select("value"))
-            applied = self.point.merge(
-                delta,
-                batch_id=self._ledger_id(batch_id) if self.exactly_once else None,
-            )
+            lid = self._ledger_id(batch_id, scope)
+            applied = self.point.merge(delta, batch_id=lid)
             self.batches_processed += 1
             if applied and self.notify_dir is not None:
-                self._append_notify(batch_id)
+                self._append_notify(lid)
         except Exception:
             # T4/S5: failed batch → DLQ, stream continues (the reference
             # republishes to QUEUE+"_failed" and NACKs)
@@ -211,7 +256,7 @@ class CrunchWorker:
             .parquet(self.quarantine_dir)
         )
 
-    def _append_notify(self, batch_id: int) -> None:
+    def _append_notify(self, lid: str) -> None:
         # S6: "crunch_update" to the topic exchange (worker.js:184-190).
         # Driver-side pyarrow, not a Spark job: the notification is one
         # driver-local row, and a python-list createDataFrame write pays
@@ -222,7 +267,6 @@ class CrunchWorker:
         import pyarrow.parquet as pq
 
         Path(self.notify_dir).mkdir(parents=True, exist_ok=True)
-        lid = self._ledger_id(batch_id)
         pq.write_table(
             pa.table(
                 {
@@ -246,18 +290,15 @@ class CrunchWorker:
     ):
         """Source-agnostic tail of the pipeline: any single-value-column
         stream → guarded/sampled/deduped foreachBatch merge."""
-        Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
-        if self.stream_id is None:
-            self.stream_id = checkpoint_stream_id(checkpoint_dir)
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
+        query, self.stream_id = start_ledgered_stream(
+            stream,
+            checkpoint_dir,
+            self._process,
+            stream_id=self._pinned_stream_id,
+            trigger_seconds=trigger_seconds,
+            available_now=available_now,
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_seconds is not None:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return writer.start()
+        return query
 
     def start_file_stream(
         self,

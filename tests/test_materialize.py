@@ -182,6 +182,9 @@ def test_streaming_continuous_aggregate(spark, tmp_path):
         ("2024-01-01 10:00:00", "a"): (3, 37),  # late row folded in
         ("2024-01-01 11:00:00", "b"): (1, 5),
     }
+    # on-disk ledger ids stay stream-<sid>-<epoch>
+    sid = (tmp_path / "ckpt" / ".cruncher-stream-id").read_text().strip()
+    assert view.point.applied_batches() == {f"stream-{sid}-0", f"stream-{sid}-1"}
 
 
 def test_retract_equals_recompute_of_remainder(spark, tmp_path):

@@ -492,6 +492,69 @@ def test_two_streams_one_point_table_do_not_collide_on_epochs(
     assert {f"stream-{w1.stream_id}-0", f"stream-{w2.stream_id}-0"} <= applied
 
 
+def test_one_worker_two_checkpoints_gets_a_scope_per_checkpoint(
+    spark, crunch_tables, tmp_path
+):
+    """ONE worker started on two checkpoints in turn (disjoint ids, both
+    epoch 0) must ledger each stream under its own checkpoint's scope:
+    a scope cached from the first start made the second stream's epoch
+    0 a ledger hit, silently dropping it, and never wrote the second
+    checkpoint's marker. A pinned stream_id shares its scope on
+    purpose: the same two streams then collide by design."""
+    ids = _ids(crunch_tables, 40)
+
+    def run(worker, sub_ids, tag):
+        d = tmp_path / f"in_{tag}"
+        d.mkdir()
+        (d / "b0.txt").write_text("\n".join(sub_ids) + "\n")
+        q = worker.start_file_stream(
+            str(d), str(tmp_path / f"ckpt_{tag}"), available_now=True
+        )
+        q.awaitTermination(300)
+        marker = tmp_path / f"ckpt_{tag}" / ".cruncher-stream-id"
+        return marker.read_text().strip() if marker.exists() else None
+
+    def make_worker(point, **kw):
+        return CrunchWorker(
+            spark,
+            crunch_tables,
+            lambda tables, batch: crunch_global_delta(tables, batch, now=_now()),
+            point,
+            **kw,
+        )
+
+    point = _global_point(spark, tmp_path, "gp_one_worker")
+    worker = make_worker(point)
+    sid_a = run(worker, ids[:20], "a")
+    sid_b = run(worker, ids[20:], "b")
+    assert sid_a and sid_b and sid_a != sid_b
+    assert worker.stream_id == sid_b
+    assert worker.batches_processed == 2 and worker.batches_failed == 0
+    assert point.applied_batches() == {f"stream-{sid_a}-0", f"stream-{sid_b}-0"}
+    expected = _mysql_add_fold(
+        [
+            crunch_global_delta(crunch_tables, ids[:20], now=_now()),
+            crunch_global_delta(crunch_tables, ids[20:], now=_now()),
+        ],
+        list(GLOBAL_POINT_KEY),
+    )
+    _assert_frames_equal(point.read(), expected)
+
+    pinned_point = _global_point(spark, tmp_path, "gp_pinned")
+    pinned = make_worker(pinned_point, stream_id="shared")
+    assert run(pinned, ids[:20], "pa") is None  # no marker minted
+    assert run(pinned, ids[20:], "pb") is None
+    assert pinned.stream_id == "shared"
+    assert pinned_point.applied_batches() == {"stream-shared-0"}
+    _assert_frames_equal(
+        pinned_point.read(),
+        _mysql_add_fold(
+            [crunch_global_delta(crunch_tables, ids[:20], now=_now())],
+            list(GLOBAL_POINT_KEY),
+        ),
+    )
+
+
 def test_crash_before_pointer_flip_leaves_table_consistent(
     spark, tmp_path, monkeypatch
 ):

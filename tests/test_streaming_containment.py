@@ -114,6 +114,11 @@ def test_decisions_match_reference(cont_env):
     assert got[20] == (10, "history")
     assert got[22] == (21, "batch")
     assert got[30] == (11, "history")
+    # direct calls ledger under the "local" scope: local:<batch_id>
+    assert {
+        row["media_id"]: row["batch_id"] for row in ingest.decisions().collect()
+    } == {20: "local:1", 22: "local:1", 30: "local:2"}
+    assert ingest.survivors.applied_batches() == {"local:0", "local:1", "local:2"}
 
 
 def test_quote_invisible_to_jaccard_is_caught(cont_env):

@@ -130,6 +130,7 @@ def test_decisions_match_reference(emb_env):
     assert got[11] == (1, "history")
     assert got[13] == (12, "batch")
     assert got[20] == (12, "history")
+    assert {r.batch_id for r in nd.decisions().collect()} == {"local:1", "local:2"}
 
 
 def test_replay_is_ledger_noop_and_compaction_safe(emb_env, spark):

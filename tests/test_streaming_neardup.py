@@ -475,3 +475,48 @@ def test_crash_mid_auto_compaction_converges(spark, tmp_path, monkeypatch):
     ]
     assert len(rows) == len(set(rows))
     assert {r[0] for r in rows} == kept  # every survivor indexed once
+
+
+def test_one_ingest_two_checkpoints_gets_a_scope_per_checkpoint(
+    spark, tmp_path
+):
+    """ONE ingest started on two checkpoints in turn (disjoint docs,
+    both epoch 0) must commit each stream under its own checkpoint's
+    scope: a scope cached from the first start made the second stream's
+    epoch 0 a ledger hit — its index and decisions landed, its
+    survivors never did — and never wrote the second checkpoint's
+    marker. Also pins the ingest's on-disk batch ids: ``<sid>:<epoch>``
+    in the ledger and the decisions, ``batch=<sid>-<epoch>`` index dirs."""
+    from cruncher_spark.streaming.neardup import NearDupIngest
+
+    nd = NearDupIngest(spark, str(tmp_path / "state"))
+    sids = []
+    for tag, rows in (
+        ("a", [(1, _doc(1)), (2, _doc(1))]),
+        ("b", [(3, _doc(3)), (4, _doc(3))]),
+    ):
+        src = tmp_path / f"in_{tag}"
+        src.mkdir()
+        _write_batch(src, "b0.parquet", rows, time.time())
+        ckpt = tmp_path / f"ckpt_{tag}"
+        nd.start_file_stream(
+            str(src), str(ckpt), available_now=True
+        ).awaitTermination(300)
+        sids.append((ckpt / ".cruncher-stream-id").read_text().strip())
+    sid_a, sid_b = sids
+    assert sid_a != sid_b and nd.stream_id == sid_b
+
+    assert sorted(r.doc_id for r in nd.retained().collect()) == [1, 3]
+    assert nd.survivors.applied_batches() == {f"{sid_a}:0", f"{sid_b}:0"}
+    dec = {
+        r.doc_id: (r.dup_of, r.via, r.batch_id)
+        for r in nd.decisions().collect()
+    }
+    assert dec == {
+        2: (1, "batch", f"{sid_a}:0"),
+        4: (3, "batch", f"{sid_b}:0"),
+    }
+    assert {d.name for d in nd.index_dir.iterdir()} == {
+        f"batch={sid_a}-0",
+        f"batch={sid_b}-0",
+    }

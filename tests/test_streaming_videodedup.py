@@ -235,6 +235,19 @@ def test_stream_wiring_and_compaction(spark, tmp_path):
     q.awaitTermination(300)
 
     assert {r["media_id"] for r in ingest.retained().collect()} == {1, 2, 4}
+    # on-disk batch ids: <sid>:<epoch> in the ledger and the decisions,
+    # batch=<sid>-<epoch> index dirs (a changed format would re-apply the
+    # last uncommitted epoch after an upgrade)
+    sid = (tmp_path / "ckpt" / ".cruncher-stream-id").read_text().strip()
+    assert ingest.stream_id == sid
+    assert ingest.survivors.applied_batches() == {f"{sid}:0", f"{sid}:1"}
+    assert {
+        r["media_id"]: r["batch_id"] for r in ingest.decisions().collect()
+    } == {3: f"{sid}:1"}
+    assert {d.name for d in ingest.index_dir.iterdir()} == {
+        f"batch={sid}-0",
+        f"batch={sid}-1",
+    }
     assert ingest.compact_index() >= 2
     # post-compaction batch still dedups against the whole history
     ingest.process_batch(_df(spark, [(5, _video(3, 4))]), 99)
